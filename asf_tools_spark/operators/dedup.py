@@ -23,6 +23,8 @@ import os
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..core.frames import local_frame
+
 
 def default_hash_family() -> str:
     """Hash family for signature hashing, from ``SPARK_GRAFT_HASH_FAMILY``.
@@ -278,9 +280,7 @@ def near_dup_clusters(
         ]
         spark = docs.sparkSession
         ktype = docs.select(key).schema[0].dataType.simpleString()
-        mapping = spark.createDataFrame(
-            rows or [(None, None)], f"_mk {ktype}, _mc {ktype}"
-        ).where(F.col("_mk").isNotNull())
+        mapping = local_frame(spark, rows, f"_mk {ktype}, _mc {ktype}")
         edges.unpersist()  # mapping is driver-built; edges has no consumer
         return (
             docs.select(F.col(key).alias("_k"))

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..core.frames import local_frame
+
 
 def pagerank(
     edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -102,7 +104,7 @@ def _pagerank_local(spark, edge_rows, src, dst, n_iters: int, damping: float,
     import numpy as np
 
     if not edge_rows:
-        return spark.createDataFrame([], _rank_schema(node_type))
+        return local_frame(spark, [], _rank_schema(node_type))
     srcs = [r[src] for r in edge_rows]
     dsts = [r[dst] for r in edge_rows]
     nodes = sorted(set(srcs) | set(dsts))
@@ -114,8 +116,8 @@ def _pagerank_local(spark, edge_rows, src, dst, n_iters: int, damping: float,
     for _ in range(n_iters):
         s = np.bincount(di, weights=rank[si] / deg[si], minlength=len(nodes))
         rank = (1.0 - damping) + damping * s
-    return spark.createDataFrame(
-        [(n, float(rank[idx[n]])) for n in nodes], _rank_schema(node_type)
+    return local_frame(
+        spark, [(n, float(rank[idx[n]])) for n in nodes], _rank_schema(node_type)
     )
 
 
@@ -263,8 +265,8 @@ def _bfs_local(spark, edge_rows, src, dst, seed_vals, max_hops: int) -> DataFram
         for v in nxt:
             hops[v] = h
         frontier = nxt
-    return spark.createDataFrame(
-        [(n, h) for n, h in sorted(hops.items())], "node string, hops long"
+    return local_frame(
+        spark, [(n, h) for n, h in sorted(hops.items())], "node string, hops long"
     )
 
 
@@ -274,9 +276,7 @@ def _hits_local(spark, edge_rows, src: str, dst: str, n_iters: int) -> DataFrame
     import numpy as np
 
     if not edge_rows:
-        return spark.createDataFrame(
-            [], "node string, hub double, auth double"
-        )
+        return local_frame(spark, [], "node string, hub double, auth double")
     srcs = [r[src] for r in edge_rows]
     dsts = [r[dst] for r in edge_rows]
     nodes = sorted(set(srcs) | set(dsts))
@@ -290,8 +290,8 @@ def _hits_local(spark, edge_rows, src: str, dst: str, n_iters: int) -> DataFrame
         auth = auth / auth.max()
         hub = np.bincount(si, weights=auth[di], minlength=len(nodes))
         hub = hub / hub.max()
-    return spark.createDataFrame(
-        [(n, float(hub[idx[n]]), float(auth[idx[n]])) for n in nodes],
+    return local_frame(
+        spark, [(n, float(hub[idx[n]]), float(auth[idx[n]])) for n in nodes],
         "node string, hub double, auth double",
     )
 
@@ -447,8 +447,8 @@ def _sssp_local(spark, edge_rows, src, dst, weight, seed_vals, max_hops: int) ->
             break
         dist.update(improved)
         frontier = improved
-    return spark.createDataFrame(
-        [(n, c) for n, c in dist.items()], "node string, cost double"
+    return local_frame(
+        spark, [(n, c) for n, c in dist.items()], "node string, cost double"
     )
 
 
@@ -536,8 +536,8 @@ def _lpa_local(spark, edge_rows, src, dst, n_iters: int, node_type) -> DataFrame
             # most frequent, ties -> smallest label
             nxt[n] = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
         labels = nxt
-    return spark.createDataFrame(
-        sorted(labels.items()),
+    return local_frame(
+        spark, sorted(labels.items()),
         StructType([
             StructField("node", node_type), StructField("label", node_type)
         ]),
@@ -634,7 +634,7 @@ def _k_core_local(spark, edge_rows, src, dst, k: int, node_type) -> DataFrame:
     schema = StructType([
         StructField("node", node_type), StructField("core_deg", LongType()),
     ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def clustering_coefficient(
@@ -728,7 +728,7 @@ def _ppr_local(spark, edge_rows, src, dst, seeds, mass, n_iters, damping,
     import numpy as np
 
     if not edge_rows:
-        return spark.createDataFrame([], _rank_schema(node_type))
+        return local_frame(spark, [], _rank_schema(node_type))
     srcs = [r[src] for r in edge_rows]
     dsts = [r[dst] for r in edge_rows]
     nodes = sorted(set(srcs) | set(dsts))
@@ -744,6 +744,6 @@ def _ppr_local(spark, edge_rows, src, dst, seeds, mass, n_iters, damping,
     for _ in range(n_iters):
         s = np.bincount(di, weights=rank[si] / deg[si], minlength=len(nodes))
         rank = (1.0 - damping) * seed + damping * s
-    return spark.createDataFrame(
-        [(n, float(rank[idx[n]])) for n in nodes], _rank_schema(node_type)
+    return local_frame(
+        spark, [(n, float(rank[idx[n]])) for n in nodes], _rank_schema(node_type)
     )

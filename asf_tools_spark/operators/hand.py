@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StructField, StructType
 
+from ..core.frames import local_frame
+
 # D8 neighbor offsets in priority order (E, SE, S, SW, W, NW, N, NE)
 D8 = [(0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1)]
 
@@ -439,12 +441,12 @@ def _border_graph_seed(
 
     if not g:
         return state
-    gdf = spark.createDataFrame(
-        pd.DataFrame({
+    gdf = local_frame(
+        spark, pd.DataFrame({
             "row": np.array([k[0] for k in g], dtype=np.int32),
             "col": np.array([k[1] for k in g], dtype=np.int32),
             "gb": np.array(list(g.values()), dtype=np.float64),
-        })
+        }), "row int, col int, gb double",
     )
     return (
         state.join(F.broadcast(gdf), ["row", "col"], "left")
@@ -457,8 +459,8 @@ def flow_direction(grid: DataFrame) -> DataFrame:
     (row,col,elev,to_row,to_col). Ties break by D8 priority order; cells
     with no strictly lower neighbor are sinks (to_row/to_col NULL)."""
     spark = grid.sparkSession
-    offsets = spark.createDataFrame(
-        [(i, dr, dc) for i, (dr, dc) in enumerate(D8)], "d8 int, dr int, dc int"
+    offsets = local_frame(
+        spark, [(i, dr, dc) for i, (dr, dc) in enumerate(D8)], "d8 int, dr int, dc int"
     )
     nbr = (
         grid.crossJoin(F.broadcast(offsets))

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from ..core.frames import local_frame
 from ..core.labeling import UnionFind, label_components
 
 _LABEL_SCHEMA = StructType([
@@ -69,7 +70,7 @@ def label_connected(
         n_px = flagged.count()
         if n_px == 0:
             flagged.unpersist()
-            return grid.sparkSession.createDataFrame([], _LABEL_SCHEMA)
+            return local_frame(grid.sparkSession, [], _LABEL_SCHEMA)
         if n_px <= local_max_px:
             pdf = flagged.toPandas()
             flagged.unpersist()
@@ -89,8 +90,8 @@ def label_connected(
                 # checkpoint: as a bare LocalRelation the labeled pixels
                 # would be re-serialized into every consuming branch of
                 # the plan (segment areas + relabel join + boundaries)
-                return grid.sparkSession.createDataFrame(
-                    out, _LABEL_SCHEMA
+                return local_frame(
+                    grid.sparkSession, out, _LABEL_SCHEMA
                 ).localCheckpoint(eager=True)
             # sparse bbox: fall through to the distributed path
             grid = flagged.withColumn(flag_col, F.lit(True))
@@ -163,7 +164,7 @@ def label_connected(
         mapping = [(x, uf.find(x)) for x in list(uf.parent)]
         if mapping:
             spark = grid.sparkSession
-            map_df = F.broadcast(spark.createDataFrame(mapping, "label long, root long"))
+            map_df = F.broadcast(local_frame(spark, mapping, "label long, root long"))
             out = (
                 labeled.join(map_df, "label", "left")
                 .withColumn("label", F.coalesce("root", "label"))

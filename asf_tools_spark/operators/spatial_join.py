@@ -6,7 +6,9 @@ Spark mapping of the reference's nested-loop geometry joins
 lookups (ref: generate_worldcover_tiles.py:143-188, J5):
 
 1. build side: polygon layer -> covering cells at the index resolution
-   (driver-side, layers are small) -> ``broadcast`` DataFrame;
+   (driver-side, layers are small) -> a driver-local Arrow
+   ``LocalRelation`` (``core.frames.local_frame``), whose broadcast runs
+   no Spark job;
 2. probe side: pages carry ``cell_id`` (pure JVM expression);
 3. equi-join on cell_id (BroadcastHashJoin — no shuffle of the big side);
 4. exact refine: vectorized crossing-number point-in-polygon in an
@@ -25,18 +27,30 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BooleanType
 
 from ..core import cells, geometry
+from ..core.frames import local_frame
 
 
 def polygon_cover_df(spark, polygons: list[dict], res: int) -> DataFrame:
-    """(poly_id, cell_id) covering pairs — the broadcast build side."""
+    """The broadcast build side: (poly_id, cell_id) covering pairs of a
+    ring layer; a box layer's rows also carry the box bounds
+    (min_lat, min_lon, max_lat, max_lon) for the JVM-side refine."""
+    if "ring" in polygons[0]:
+        rows = [
+            (int(p["poly_id"]), int(c))
+            for p in polygons
+            for c in geometry.polygon_cover_cells(p["ring"], res)
+        ]
+        return local_frame(spark, rows, "poly_id int, cell_id long")
     rows = []
     for p in polygons:
-        if "ring" in p:
-            cover = geometry.polygon_cover_cells(p["ring"], res)
-        else:
-            cover = cells.cover_bbox(p["min_lat"], p["min_lon"], p["max_lat"], p["max_lon"], res)
-        rows.extend((int(p["poly_id"]), int(c)) for c in cover)
-    return spark.createDataFrame(rows, "poly_id int, cell_id long")
+        bounds = (float(p["min_lat"]), float(p["min_lon"]), float(p["max_lat"]), float(p["max_lon"]))
+        rows.extend(
+            (int(p["poly_id"]), int(c)) + bounds for c in cells.cover_bbox(*bounds, res)
+        )
+    return local_frame(
+        spark, rows,
+        "poly_id int, cell_id long, min_lat double, min_lon double, max_lat double, max_lon double",
+    )
 
 
 def _pip_udf(polygons: list[dict]):
@@ -70,29 +84,14 @@ def spatial_join_polygons(
     if "ring" in polygons[0]:
         refined = candidates.where(_pip_udf(polygons)(F.col("lat"), F.col("lon"), F.col("poly_id")))
     else:
-        boxes = {int(p["poly_id"]): p for p in polygons}
-        cond = None
-        # boxes are SQL-expressible: refine stays JVM-side via a broadcast
-        # join against the box bounds instead of a Python UDF
-        bounds = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (int(p["poly_id"]), p["min_lat"], p["min_lon"], p["max_lat"], p["max_lon"])
-                    for p in boxes.values()
-                ],
-                "poly_id int, min_lat double, min_lon double, max_lat double, max_lon double",
-            )
-        )
-        refined = (
-            candidates.join(bounds, "poly_id", "inner")
-            .where(
-                (F.col("lat") >= F.col("min_lat"))
-                & (F.col("lat") <= F.col("max_lat"))
-                & (F.col("lon") >= F.col("min_lon"))
-                & (F.col("lon") <= F.col("max_lon"))
-            )
-            .drop("min_lat", "min_lon", "max_lat", "max_lon")
-        )
+        # boxes are SQL-expressible: the refine stays JVM-side against the
+        # bounds the cover rows carry, instead of a Python UDF
+        refined = candidates.where(
+            (F.col("lat") >= F.col("min_lat"))
+            & (F.col("lat") <= F.col("max_lat"))
+            & (F.col("lon") >= F.col("min_lon"))
+            & (F.col("lon") <= F.col("max_lon"))
+        ).drop("min_lat", "min_lon", "max_lat", "max_lon")
     if how == "left_semi":
         return pages.join(refined.select("cell_id", "lat", "lon").distinct(), ["cell_id", "lat", "lon"], "left_semi")
     return refined
@@ -158,7 +157,7 @@ def knn_join(
         for cc in cells.k_ring(c, max_ring):
             rows.append((int(t["target_id"]), float(t["lat"]), float(t["lon"]), int(cc)))
     ringed = F.broadcast(
-        spark.createDataFrame(rows, "target_id int, t_lat double, t_lon double, cell_id long")
+        local_frame(spark, rows, "target_id int, t_lat double, t_lon double, cell_id long")
     )
     from ..functions.spatial import with_cell_col
 

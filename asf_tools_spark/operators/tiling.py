@@ -21,18 +21,14 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from ..core import tiles as core_tiles
 from ..core.em import em_threshold
 from ..core.selection import select_backscatter_tiles_from_stats, select_hand_tiles_from_stats
+from ..core.frames import local_frame
 
 
 def long_grid_df(spark: SparkSession, array, tile_shape: tuple[int, int], pad_value=np.nan) -> DataFrame:
     """2D (masked) numpy array -> long-form grid DataFrame (test/bench aid)."""
     cols = core_tiles.grid_to_long(array, tile_shape, pad_value)
-    pdf = pd.DataFrame(cols)
-    return spark.createDataFrame(pdf).select(
-        F.col("tile_id").cast("long"),
-        F.col("row").cast("int"),
-        F.col("col").cast("int"),
-        F.col("value").cast("double"),
-        F.col("valid").cast("boolean"),
+    return local_frame(
+        spark, pd.DataFrame(cols), "tile_id long, row int, col int, value double, valid boolean"
     )
 
 
@@ -120,8 +116,8 @@ def select_backscatter_tiles(grid: DataFrame, hand_candidates: np.ndarray,
                 medians[r.tile_id] = r.tile_median
         return select_backscatter_tiles_from_stats(sub_std, medians, hand_candidates)
     spark = grid.sparkSession
-    hand = spark.createDataFrame(
-        pd.DataFrame({"tile_id": np.asarray(hand_candidates, dtype=np.int64)})
+    hand = local_frame(
+        spark, pd.DataFrame({"tile_id": np.asarray(hand_candidates, dtype=np.int64)}), "tile_id long"
     )
     sel = backscatter_selection_df(backscatter_tile_stats(grid, tile_shape), hand)
     return np.array([int(r.tile_id) for r in sel.collect()], dtype=np.int64)

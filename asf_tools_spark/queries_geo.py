@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import oracle
 from .core.io import read_table
 from .core import cells
+from .core.frames import local_frame
 from .functions import geocode
 from .sources.pages import _with_geotag, geotagged_documents
 
@@ -763,7 +764,7 @@ def q_polygon_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         x, y, _ = cells.decode_xy(np.asarray(cover))
         for xi, yi in zip(x.tolist(), y.tolist()):
             rows.append((int(p["poly_id"]), int(yi), int(xi)))
-    cand = spark.createDataFrame(rows, "poly_id int, row long, col long")
+    cand = local_frame(spark, rows, "poly_id int, row long, col long")
     cand = cand.select(
         "poly_id", "row", "col",
         (F.col("row") * n + F.col("col")).alias("cell_key"),
@@ -1053,7 +1054,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             float(p["ring"][:, 1].max()), float(p["ring"][:, 0].max()), 8,
         )
     ]
-    cover = spark.createDataFrame(cover_rows, "poly_id int, cell_id long")
+    cover = local_frame(spark, cover_rows, "poly_id int, cell_id long")
     # events, not documents: 20x the points at every sf — the zonal means
     # rest on a non-trivial population per zone. fan_out: broadcast PIP
     # keeps the stream side's partitioning, so a single-file scan would
@@ -1378,7 +1379,7 @@ def q_fence_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             float(p["ring"][:, 1].max()) + m, float(p["ring"][:, 0].max()) + m, 8,
         )
     ]
-    cover = spark.createDataFrame(cover_rows, "poly_id int, cell_id long")
+    cover = local_frame(spark, cover_rows, "poly_id int, cell_id long")
     pages = geotagged_documents(spark, sf_dir, cell_res=8)
     cand = (
         pages.select("doc_id", "lat", "lon", "cell_id")

@@ -231,3 +231,26 @@ def test_labeling_local_guard_matches_distributed(spark):
     pd_ = {(r.row, r.col): r.label for r in dist.collect()}
     assert pl.keys() == pd_.keys()
     assert canon(pl) == canon(pd_)
+
+
+def test_stats_pool_shut_down_when_tile_selection_raises(spark, scene, monkeypatch):
+    """The hand-stats helper thread must not outlive a failing call: the
+    tile-selection error propagates and no pool thread stays alive."""
+    import threading
+
+    from asf_tools_spark.operators import tiling
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("tile selection failed")
+
+    vv, vh, hand = scene
+    grids = [long_grid_df(spark, a, TILE, pad_value=p) for a, p in ((vv, 0.0), (vh, 0.0), (hand, np.nan))]
+    before = {t.ident for t in threading.enumerate()}
+    monkeypatch.setattr(tiling, "select_backscatter_tiles", fail)
+    with pytest.raises(RuntimeError, match="tile selection failed"):
+        make_water_map_grid(*grids, SHAPE, tile_shape=TILE, pixel_size=30.0)
+    leaked = [
+        t.name for t in threading.enumerate()
+        if t.ident not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert leaked == []
